@@ -16,6 +16,8 @@ afterwards and never ride the big shuffle.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,12 +26,16 @@ from simhash_text_dedup_spark.config import DedupConfig
 from simhash_text_dedup_spark.functions.minhash import minhash_udf
 
 
-def minhash_signatures(prepared: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """doc_id, sig (array<bigint> n_perms), bands (array<bigint> n_bands)."""
+def minhash_signatures(
+    prepared: DataFrame, cfg: DedupConfig, keep: Sequence[str] = ()
+) -> DataFrame:
+    """doc_id, sig (array<bigint> n_perms), bands (array<bigint> n_bands),
+    then the `keep` columns of `prepared`, passed through the UDF
+    projection."""
     mh = minhash_udf(cfg.minhash_perms, cfg.minhash_bands, cfg.minhash_shingle_width)
     return prepared.select(
-        "doc_id", mh(F.col("content")).alias("m")
-    ).select("doc_id", "m.sig", "m.bands")
+        "doc_id", mh(F.col("content")).alias("m"), *keep
+    ).select("doc_id", "m.sig", "m.bands", *keep)
 
 
 def minhash_candidates(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:

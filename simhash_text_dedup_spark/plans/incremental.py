@@ -279,10 +279,7 @@ def run_incremental(
         "entity_id", F.xxhash64("repo", "path")
     )
     new_fps = ck.through(
-        fingerprint_stage(prepared, cfg).join(
-            prepared.select("doc_id", "entity_id"), "doc_id"
-        ),
-        "new_fingerprints",
+        fingerprint_stage(prepared, cfg, keep=["entity_id"]), "new_fingerprints"
     )
 
     if base is None:
@@ -294,8 +291,11 @@ def run_incremental(
         F.lit(False).alias("is_new"),
     )
 
-    # --- unchanged re-crawls -> unload (DeDupMapper.java:147-153)
-    unload = ck.through(unload_list(new_fps, base_fps), "unload")
+    # --- unchanged re-crawls -> unload (DeDupMapper.java:147-153).
+    # Only the caller reads it, so it gets a free counter, not a cut: a
+    # lazy local cut still runs its exchanges when it is defined (AQE
+    # executes the plan to build the cut's RDD), an extra query
+    unload = ck.observe(unload_list(new_fps, base_fps), "unload")
 
     # --- spam kill within the new batch (unchanged re-crawls still
     # probe — the reference writes same_finger rows to BOTH the unload
@@ -342,9 +342,10 @@ def run_incremental(
         # drop re-crawled entities' stale base rows (the reference
         # mapper overwrites finger with newfinger,
         # DeDupMapper.java:156-158), so a new version never pairs with
-        # its own previous row
+        # its own previous row (an anti join needs no distinct build
+        # side, so no aggregation exchange over the batch)
         base_live = base_fps.join(
-            new_fps.select("entity_id").distinct(), "entity_id", "left_anti"
+            new_fps.select("entity_id"), "entity_id", "left_anti"
         )
 
         # band join: new (left) vs new ∪ live-old (right); old x old
@@ -372,9 +373,7 @@ def run_incremental(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
         new_sigs_out = ck.through(
-            minhash_signatures(surviving_prepared, cfg).join(
-                prepared.select("doc_id", "entity_id"), "doc_id"
-            ),
+            minhash_signatures(surviving_prepared, cfg, keep=["entity_id"]),
             "minhash_sigs",
         )
         if base_sigs is None:
@@ -447,10 +446,12 @@ def run_incremental(
             "modify_list",
         )
     else:
-        # --- 'cc' mode: per-pair loser split (loser_lists_cc)
+        # --- 'cc' mode: per-pair loser split (loser_lists_cc).  The
+        # delete list feeds both the caller's commit and its output, so
+        # it is cut; the modify list has one reader and only observed
         dels, mods = loser_lists_cc(pairs)
         delete_list = ck.through(dels, "delete_list")
-        modify_list = ck.through(mods, "modify_list")
+        modify_list = ck.observe(mods, "modify_list")
 
     return IncrementalResult(
         new_fingerprints=new_fps,

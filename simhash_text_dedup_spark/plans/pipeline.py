@@ -14,6 +14,7 @@ skipping stages whose checkpoint already exists (resume).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,8 +59,12 @@ def prepare_documents(docs: DataFrame) -> DataFrame:
     return out
 
 
-def fingerprint_stage(prepared: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """doc_id, fingerprint, score, is_new, content_sha256.
+def fingerprint_stage(
+    prepared: DataFrame, cfg: DedupConfig, keep: Sequence[str] = ()
+) -> DataFrame:
+    """doc_id, fingerprint, score, is_new, content_sha256, then the
+    `keep` columns of `prepared`, which ride through the UDF projection
+    (no join back to `prepared` needed to recover them).
 
     With cfg.normalize_code the fingerprint is computed over
     comment-stripped / whitespace-collapsed content (JVM-side regex
@@ -78,6 +83,7 @@ def fingerprint_stage(prepared: DataFrame, cfg: DedupConfig) -> DataFrame:
         "score",
         "is_new",
         "content_sha256",
+        *keep,
     )
 
 

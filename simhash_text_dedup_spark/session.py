@@ -33,12 +33,12 @@ def _warm_python_runner(spark: SparkSession) -> None:
     long-lived and every pipeline in this repo runs Arrow UDF stages,
     so initializing the path at startup is the steady-state-honest
     shape; a 64-row range touches no input data.  Failure is
-    non-fatal: the first real UDF stage then pays the init exactly as
-    before."""
+    non-fatal and warns: the first real UDF stage then pays the init
+    exactly as before, and the next get_spark call tries again (the app
+    is recorded as warmed only once a warm-up succeeds)."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PY_RUNNER_WARMED:
         return
-    _PY_RUNNER_WARMED.add(app_id)
     try:
         from pyspark.sql import functions as F
         from pyspark.sql.pandas.functions import pandas_udf
@@ -58,8 +58,30 @@ def _warm_python_runner(spark: SparkSession) -> None:
         noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
         noop(base.groupBy("g").applyInPandas(_wg, "id long, g long"))
         noop(base.mapInPandas(_wm, "id long, g long"))
-    except Exception:  # pragma: no cover - defensive; warmup only
-        pass
+    except Exception as e:
+        import warnings
+
+        warnings.warn(
+            f"Python-runner warm-up failed ({e!r}); the first UDF stage "
+            "pays its init instead",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return
+    _PY_RUNNER_WARMED.add(app_id)
+
+
+# Generated classes the JVM keeps compiled.  Spark's default (100) is
+# LRU, and one incremental round compiles ~138 distinct classes (a batch
+# run_dedup pass ~84), so a round cycling through them in the same order
+# missed on every lookup and recompiled all of them each round.
+CODEGEN_CACHE_ENTRIES = 2000
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory, so the heap never outgrows the machine."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2**21}m"
 
 
 def get_spark(
@@ -68,7 +90,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local session on `cores` cores (default $SPARK_GRAFT_CPUS, else the
+    CPUs this process may run on) with a driver heap of $SPARK_DRIVER_MEM,
+    else half of physical memory.  `extra` overrides any setting."""
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -78,12 +105,16 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

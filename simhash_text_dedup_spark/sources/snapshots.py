@@ -24,10 +24,14 @@ On a real cluster, swap this class for the Iceberg catalog:
   spark.sql("MERGE INTO corpus t USING updates s ON t.entity_id = s.entity_id "
             "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
 Everything else in the pipeline only sees DataFrames, so nothing else
-changes.  Layout:
+changes.  Each snapshot entry records its schema (Spark's JSON form),
+as Iceberg keeps the schema in table metadata: a read passes it to the
+reader instead of inferring it from a parquet footer, which costs a
+Spark job per read.  An entry without `schema` (an older log) is read
+by inference.  Layout:
 
   table_dir/
-    _snapshots.json        # [{"id", "parent", "op", "rows", "dirs"}]
+    _snapshots.json        # [{"id", "parent", "op", "rows", "dirs", "schema"}]
     snap-00000001/ *.parquet
     snap-00000002/ *.parquet
 """
@@ -38,7 +42,9 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ConcurrentCommit(RuntimeError):
@@ -86,20 +92,31 @@ class SnapshotTable:
                 raise KeyError(f"no snapshot {snapshot_id} in {self.path}")
             snap = matches[0]
         dirs = [os.path.join(self.path, d) for d in snap["dirs"]]
-        return self.spark.read.parquet(*dirs)
+        reader = self.spark.read
+        if snap.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*dirs)
 
     def is_empty(self) -> bool:
         return not self._log()
 
     # --- commit machinery --------------------------------------------
-    def _commit(self, parent: int | None, op: str, dirs: list[str], rows: int) -> int:
+    def _commit(
+        self,
+        parent: int | None,
+        op: str,
+        dirs: list[str],
+        rows: int,
+        schema: StructType | None = None,
+    ) -> int:
         """Atomically append a snapshot whose parent must still be the
         head (optimistic concurrency).  The read-check-replace sequence
         holds an exclusive flock on `_commit.lock`, so two local writers
         serialize; the loser of a parent race gets ConcurrentCommit, and
         its orphaned data dir is never referenced by any snapshot (an
         Iceberg catalog's compare-and-swap plays this role on a real
-        cluster)."""
+        cluster).  `schema` is the written frame's schema; without it,
+        reads of this snapshot infer the schema from the files."""
         import fcntl
 
         lock_path = os.path.join(self.path, "_commit.lock")
@@ -112,8 +129,11 @@ class SnapshotTable:
                     f"table head moved {parent} -> {head} during the operation"
                 )
             new_id = (head or 0) + 1
-            log.append({"id": new_id, "parent": parent, "op": op,
-                        "rows": rows, "dirs": dirs})
+            entry = {"id": new_id, "parent": parent, "op": op,
+                     "rows": rows, "dirs": dirs}
+            if schema is not None:
+                entry["schema"] = schema.jsonValue()
+            log.append(entry)
             fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
             with os.fdopen(fd, "w") as f:
                 json.dump(log, f, indent=1)
@@ -129,9 +149,12 @@ class SnapshotTable:
 
         d = f"snap-{snap_id_hint:08d}-{uuid.uuid4().hex[:8]}"
         full = os.path.join(self.path, d)
-        df.write.mode("overwrite").parquet(full)
-        rows = self.spark.read.parquet(full).count()
-        return d, rows
+        # the row count is observed on the write itself, not re-read
+        obs = Observation(f"rows:{d}")
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(full)
+        return d, obs.get["rows"]
 
     # --- operations ----------------------------------------------------
     def append(self, df: DataFrame) -> int:
@@ -142,12 +165,14 @@ class SnapshotTable:
         prev_dirs = log[-1]["dirs"] if log else []
         prev_rows = log[-1]["rows"] if log else 0
         d, rows = self._write_data(df, (parent or 0) + 1)
-        return self._commit(parent, "append", prev_dirs + [d], prev_rows + rows)
+        return self._commit(
+            parent, "append", prev_dirs + [d], prev_rows + rows, df.schema
+        )
 
     def overwrite(self, df: DataFrame) -> int:
         parent = self.current_snapshot()
         d, rows = self._write_data(df, (parent or 0) + 1)
-        return self._commit(parent, "overwrite", [d], rows)
+        return self._commit(parent, "overwrite", [d], rows, df.schema)
 
     def merge(self, source: DataFrame, key_cols: list[str]) -> int:
         """MERGE INTO this table USING source ON key_cols:
@@ -161,10 +186,13 @@ class SnapshotTable:
         if parent is None:
             return self.overwrite(source)
         target = self.read(parent)
-        keys = source.select(*key_cols).distinct()
-        merged = target.join(keys, key_cols, "left_anti").unionByName(source)
+        # an anti join needs no distinct build side: duplicate keys drop
+        # the same target rows, so no aggregation exchange runs
+        merged = target.join(
+            source.select(*key_cols), key_cols, "left_anti"
+        ).unionByName(source)
         d, rows = self._write_data(merged, parent + 1)
-        return self._commit(parent, "merge", [d], rows)
+        return self._commit(parent, "merge", [d], rows, merged.schema)
 
 
 def snapshot_diff(

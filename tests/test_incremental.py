@@ -224,3 +224,31 @@ def test_banded_table_round_matches_plain_round(spark, scenario, tmp_path_factor
         assert pa == pb
     finally:
         spark.sql("DROP DATABASE IF EXISTS incb CASCADE")
+
+
+def test_steady_round_compiles_no_new_classes(spark, tmp_path):
+    """A second round over the same inputs reuses every generated class:
+    the session's codegen cache holds all the classes one round compiles."""
+    base_pdf, _ = generate_corpus(CorpusSpec(n_docs=80, seed=21))
+    spark.createDataFrame(base_pdf.iloc[:60]).write.parquet(str(tmp_path / "base_docs"))
+    spark.createDataFrame(base_pdf.iloc[50:]).write.parquet(str(tmp_path / "batch"))
+    prepared = prepare_documents(spark.read.parquet(str(tmp_path / "base_docs"))).withColumn(
+        "entity_id", F.xxhash64("repo", "path")
+    )
+    fingerprint_stage(prepared, CFG).join(
+        prepared.select("doc_id", "entity_id"), "doc_id"
+    ).select("doc_id", "entity_id", "fingerprint", "score").write.parquet(str(tmp_path / "base"))
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def round_():
+        res = run_incremental(spark, spark.read.parquet(str(tmp_path / "batch")),
+                              spark.read.parquet(str(tmp_path / "base")), CFG)
+        return [sorted(df.collect()) for df in (
+            res.new_fingerprints, res.unload, res.spam_kills, res.pairs,
+            res.delete_list, res.modify_list,
+        )]
+
+    first = round_()
+    before = metric.getCount()
+    assert round_() == first
+    assert metric.getCount() - before == 0

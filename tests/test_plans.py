@@ -324,3 +324,33 @@ def test_dup_gram_agg_spreads_hot_grams_two_phase(spark):
     one_key = re.findall(r"hashpartitioning\(gram#\d+, \d+\)", plan)
     assert len(two_key) >= 1, plan
     assert len(one_key) >= 1, plan
+
+
+def test_incremental_batch_scanned_once(spark, tmp_path):
+    """run_incremental's new_fingerprints carry entity_id through the
+    fingerprint projection: one scan of the batch, no join back to it."""
+    import re
+    from unittest.mock import patch
+
+    from simhash_text_dedup_spark.plans.incremental import run_incremental
+    from simhash_text_dedup_spark.plans.pipeline import Checkpointer
+    from simhash_text_dedup_spark.sources.corpus import CorpusSpec, generate_corpus
+
+    docs, _ = generate_corpus(CorpusSpec(n_docs=20, seed=5))
+    spark.createDataFrame(docs).write.parquet(str(tmp_path / "batch"))
+    staged = {}
+    real_through = Checkpointer.through
+
+    def spy(self, df, stage):
+        staged[stage] = df
+        return real_through(self, df, stage)
+
+    with patch.object(Checkpointer, "through", spy):
+        res = run_incremental(
+            spark, spark.read.parquet(str(tmp_path / "batch")), None,
+            DedupConfig(spam_threshold=5),
+        )
+    plan = _plan(staged["new_fingerprints"])
+    assert len(set(re.findall(r"\((\d+)\) Scan parquet", plan))) == 1, plan
+    assert "Join" not in plan, plan
+    assert "entity_id" in res.new_fingerprints.columns

@@ -175,3 +175,76 @@ def test_snapshot_diff_null_keys_pair_up(spark, tmp_path):
     v2 = t.overwrite(_df(spark, [(None, 10, 0.5), (1, 99, 0.5)]))
     rows = snapshot_diff(t, v1, v2, ["entity_id"]).collect()
     assert {(r.entity_id, r.change) for r in rows} == {(1, "changed")}
+
+
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_launches_no_job(spark, tmp_path):
+    """The snapshot's schema is in the log, so a read infers nothing."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10, 0.5), (2, 20, 0.6)]))
+    df, n_jobs = _jobs_in(spark, "snap-read", t.read)
+    assert n_jobs == 0
+    assert df.schema == _df(spark, []).schema
+
+
+def test_merge_launches_only_the_write_jobs(spark, tmp_path, monkeypatch):
+    """merge() runs its write and nothing else: no schema inference of
+    the target and no read-back count of the written files."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10, 0.5), (2, 20, 0.6), (3, 30, 0.7)]))
+    sc = spark.sparkContext
+    real_parquet = DataFrameWriter.parquet
+
+    def write_in_own_group(self, *args, **kwargs):
+        sc.setJobGroup("snap-write", "snap-write")
+        try:
+            return real_parquet(self, *args, **kwargs)
+        finally:
+            sc.setJobGroup("snap-merge", "snap-merge")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_in_own_group)
+    src = _df(spark, [(2, 99, 0.9), (4, 40, 0.4)])
+    _, outside_write = _jobs_in(spark, "snap-merge", lambda: t.merge(src, ["entity_id"]))
+    assert outside_write == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("snap-write")) > 0
+    monkeypatch.undo()
+    assert {r.entity_id: r.fingerprint for r in t.read().collect()} == {1: 10, 2: 99, 3: 30, 4: 40}
+
+
+def test_logged_rows_match_the_data(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10, 0.5), (2, 20, 0.6)]))
+    t.append(_df(spark, [(3, 30, 0.7)]))
+    t.append(_df(spark, []))
+    t.overwrite(_df(spark, [(1, 11, 0.5), (5, 50, 0.5)]))
+    t.merge(_df(spark, [(1, 12, 0.5), (1, 12, 0.5), (6, 60, 0.6)]), ["entity_id"])
+    for snap in t.snapshots():
+        assert snap["rows"] == t.read(snap["id"]).count(), snap["op"]
+
+
+def test_log_without_schema_reads_by_inference(spark, tmp_path):
+    """A log written before snapshots recorded their schema still reads."""
+    import json
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10, 0.5), (2, 20, 0.6)]))
+    pinned = t.read()
+    log = t.snapshots()
+    for entry in log:
+        del entry["schema"]
+    with open(t._log_path, "w") as f:
+        json.dump(log, f)
+    inferred = t.read()
+    assert inferred.schema == pinned.schema
+    assert sorted(inferred.collect()) == sorted(pinned.collect())

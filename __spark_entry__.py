@@ -3292,7 +3292,8 @@ def _quality_classifier_sql() -> str:
         )
         SELECT d.doc_id,
                COALESCE(s.n_features, 0) AS n_features,
-               COALESCE(s.score_permille, (SELECT b FROM thr)) AS score_permille,
+               COALESCE(s.score_permille, (SELECT b FROM thr))::BIGINT
+                 AS score_permille,
                (COALESCE(s.score_permille, (SELECT b FROM thr))
                   >= (SELECT b FROM thr)) AS pred
         FROM docs d LEFT JOIN score s USING (doc_id)

@@ -79,18 +79,18 @@ def connected_components(
     them through the loop).
     """
     spark = edges.sparkSession
-    # NOTE for callers: the strategy probe (count) and the chosen
-    # strategy (toPandas / the propagation loop) BOTH consume `edges`;
-    # pass a lineage-cut frame (localCheckpoint / Checkpointer.through)
-    # or the pair DAG evaluates twice per call.  The cut cannot live
-    # here: a caller's observe() CollectMetrics would be buried below
-    # the checkpoint and never report (see Checkpointer.through).
-    n_edges = edges.count()
-    if n_edges == 0:
+    # One bounded collect both picks the strategy and, on the driver path,
+    # is its input.  NOTE for callers: the distributed path reads `edges`
+    # again; pass a lineage-cut frame (localCheckpoint /
+    # Checkpointer.through) or the pair DAG evaluates twice there.  The
+    # cut cannot live here: a caller's observe() CollectMetrics would be
+    # buried below the checkpoint and never report (see
+    # Checkpointer.through).
+    pdf = edges.select("a_id", "b_id").limit(driver_threshold + 1).toPandas()
+    if pdf.empty:
         return spark.createDataFrame([], "doc_id long, cluster_id long")
 
-    if n_edges <= driver_threshold:
-        pdf = edges.select("a_id", "b_id").toPandas()
+    if len(pdf) <= driver_threshold:
         verts, labels = _driver_union_find(
             pdf.to_numpy(dtype=np.int64, copy=False)
         )

@@ -8,8 +8,11 @@ it runs on local[N] which models N executor cores.
 from __future__ import annotations
 
 import os
+import site
+import warnings
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # appIds whose JVM Python-runner path has been warmed (getOrCreate can
@@ -59,8 +62,6 @@ def _warm_python_runner(spark: SparkSession) -> None:
         noop(base.groupBy("g").applyInPandas(_wg, "id long, g long"))
         noop(base.mapInPandas(_wm, "id long, g long"))
     except Exception as e:
-        import warnings
-
         warnings.warn(
             f"Python-runner warm-up failed ({e!r}); the first UDF stage "
             "pays its init instead",
@@ -84,6 +85,33 @@ def default_driver_memory() -> str:
     return f"{phys // 2**21}m"
 
 
+WORKER_DAEMON = "simhash_text_dedup_spark.worker_daemon"
+
+
+def worker_start_path() -> list[str]:
+    """Where a new Python worker imports from before a task adds py-files:
+    its cwd, $PYTHONPATH and site-packages.  The worker inherits the cwd
+    and environment of the JVM, which starts in this process's unless it
+    is already running."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        cwd, pythonpath = os.getcwd(), os.environ.get("PYTHONPATH")
+    else:
+        system = jvm.java.lang.System
+        cwd, pythonpath = system.getProperty("user.dir"), system.getenv("PYTHONPATH")
+    return [cwd, *(pythonpath or "").split(os.pathsep), *site.getsitepackages(),
+            site.getusersitepackages()]
+
+
+def importable_at_worker_start(pkg_dir: str, start_path: list[str]) -> bool:
+    """True when the package at pkg_dir is a directory, not inside an
+    archive, whose parent is on start_path."""
+    if not os.path.isdir(pkg_dir):
+        return False
+    parent = os.path.realpath(os.path.dirname(pkg_dir))
+    return any(p and os.path.realpath(p) == parent for p in start_path)
+
+
 def get_spark(
     app: str = "simhash-text-dedup-spark",
     cores: int | None = None,
@@ -92,7 +120,11 @@ def get_spark(
 ) -> SparkSession:
     """Local session on `cores` cores (default $SPARK_GRAFT_CPUS, else the
     CPUs this process may run on) with a driver heap of $SPARK_DRIVER_MEM,
-    else half of physical memory.  `extra` overrides any setting."""
+    else half of physical memory.  `extra` overrides any setting.
+
+    Python workers run `worker_daemon`, which spares each task a re-read
+    of Spark's archives, when the package is importable at worker start;
+    otherwise they run Spark's default daemon and a RuntimeWarning says so."""
     cores = cores or int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     )
@@ -116,6 +148,19 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
+    # The worker daemon starts before any py-files are on the worker path,
+    # so it is used only when the package can be imported without them.
+    if importable_at_worker_start(os.path.dirname(os.path.abspath(__file__)),
+                                  worker_start_path()):
+        b = b.config("spark.python.daemon.module", WORKER_DAEMON)
+    else:
+        warnings.warn(
+            "simhash_text_dedup_spark is not importable from the Python "
+            "workers' start path, so they run Spark's default daemon and "
+            "every Python task re-reads Spark's archives",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -44,3 +44,45 @@ def test_chain_topology(spark):
 def test_empty_edges(spark):
     edges = spark.createDataFrame([], "a_id long, b_id long")
     assert connected_components(edges).count() == 0
+
+
+def _labels(frame):
+    return {(r.doc_id, r.cluster_id) for r in frame.collect()}
+
+
+def test_driver_path_is_one_job(spark):
+    """Picking the strategy and fetching the edges is one bounded collect,
+    not a count and then a second pass."""
+    sc = spark.sparkContext
+    # a lazily cut frame over a shuffle, the way Checkpointer.through hands pairs over
+    edges = (
+        spark.createDataFrame(_random_edges(), "a_id long, b_id long")
+        .groupBy("a_id", "b_id").count().select("a_id", "b_id")
+        .localCheckpoint(eager=False)
+    )
+    sc.setJobGroup("cc-driver-path", "cc-driver-path")
+    try:
+        labels = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-path")) == 1
+    assert labels.count() > 0
+
+
+def test_threshold_boundary_picks_the_path(spark, monkeypatch):
+    """At exactly driver_threshold edges the driver path runs; one edge
+    fewer allowed and the distributed path runs, with the same labels."""
+    from simhash_text_dedup_spark.operators import cluster
+
+    rows = sorted(set(_random_edges(n_edges=60)))
+    edges = spark.createDataFrame(rows, "a_id long, b_id long")
+    calls = []
+    real = cluster._driver_union_find
+    monkeypatch.setattr(cluster, "_driver_union_find",
+                        lambda e: calls.append(len(e)) or real(e))
+
+    drv = _labels(connected_components(edges, driver_threshold=len(rows)))
+    assert calls == [len(rows)]
+    dist = _labels(connected_components(edges, driver_threshold=len(rows) - 1))
+    assert calls == [len(rows)]
+    assert drv == dist

@@ -72,6 +72,20 @@ def test_query_vs_oracle(spark, ddb, name):
     assert not mism, f"{name}: first value mismatch at {mism[0]}: {sset[mism[0]]} vs {dset[mism[0]]}"
 
 
+def test_oracle_types_are_stable(ddb):
+    """An oracle column typed HUGEINT or DECIMAL hashes differently from
+    Spark's long/double even where the values agree."""
+    wide = []
+    for name, sql in ORACLES.items():
+        rel = ddb.sql(sql)
+        wide += [
+            (name, col, str(ty))
+            for col, ty in zip(rel.columns, rel.types)
+            if str(ty).startswith(("HUGEINT", "UHUGEINT", "DECIMAL"))
+        ]
+    assert not wide
+
+
 # The driver records only the FIRST 50 queries() entries in
 # CORRECTNESS_r{N}.json (dict order is load-bearing — see CLAUDE.md).
 # Round 4's verdict flagged that the hash-verified production family had

@@ -28,13 +28,8 @@ import time
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "300000"))
 CORPUS_DIR = f"/tmp/simhash_bench_corpus_v5_{BENCH_DOCS}"
 
-# Right-sized heap for bench sessions: this VM zeroes fresh pages at
-# ~0.3-1 GB/s, and G1 under a 48g ceiling keeps growing into cold pages
-# for MINUTES (measured first-run 54-76s, steady only after 4-5 runs);
-# with a 12-16g ceiling G1 reuses regions instead (measured 22s first
-# run, 8.6s steady on the same corpus in the same host period). The
-# pipeline needs ~2-4g at these scales. Overridable via SPARK_DRIVER_MEM.
-os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+# The driver heap is get_spark's default (half of physical memory) or
+# $SPARK_DRIVER_MEM; the pipeline needs ~2-4g at these scales.
 
 
 def ensure_corpus(n_docs: int) -> str:
@@ -94,11 +89,12 @@ def run_dedup_bench(spark, corpus_path: str, shuffle_partitions: int) -> dict:
 
 def main_default() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from simhash_text_dedup_spark.session import get_spark
 
-    spark = get_spark(app="bench", cores=cpus, shuffle_partitions=cpus * 2)
+    # cores: $SPARK_GRAFT_CPUS, else the CPUs this process may use
+    spark = get_spark(app="bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as entry_mod
 

@@ -25,8 +25,6 @@ import os
 import sys
 import time
 
-os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-
 HEADLINE = [
     "tpch_q1",
     "word_count",
@@ -44,7 +42,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     samples_n = 3
     plans_tag = None
     only = None
@@ -58,7 +55,10 @@ def main() -> None:
 
     from simhash_text_dedup_spark.session import get_spark
 
-    spark = get_spark(app="bench-extra", cores=cpus, shuffle_partitions=cpus * 2)
+    # cores: $SPARK_GRAFT_CPUS, else the CPUs this process may use; heap:
+    # $SPARK_DRIVER_MEM, else half of physical memory
+    spark = get_spark(app="bench-extra")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as entry_mod
 

@@ -44,21 +44,12 @@ class DedupConfig:
     cc_driver_threshold: int = 2_000_000
 
     # --- Band-bucket skew handling: buckets with more distinct
-    # fingerprints than the cap are processed through a salted
-    # repartition sub-join ('salt', no recall loss, quadratic work
-    # spread across salt_partitions^1 tasks) or excluded from that band
-    # ('drop': lossy for pairs whose ONLY shared bands are hot; pairs
-    # that also share a cold band are still emitted there). The spam
-    # pass removes the dominant source of hot buckets first.
+    # fingerprints (MinHash: rows) than the cap are spread across
+    # salt_partitions tasks by operators/skew.salted_join — no recall
+    # loss, every band join routes this way. The spam pass removes the
+    # dominant source of hot buckets first.
     band_bucket_cap: int = 20000
-    hot_bucket_mode: str = "salt"   # 'salt' | 'drop'
     salt_partitions: int = 16
-    # drop mode collects the hot (band, key) tail to the driver and
-    # inlines it into the first-COLD-match predicate; an adversarial
-    # flood could blow that tail up, so past this many keys the
-    # collect is abandoned (plain first-match predicate + warning —
-    # slightly lossier, but driver memory and plan size stay bounded).
-    hot_drop_key_cap: int = 2000
 
     # --- MinHash / LSH borderline path (north_star extension).
     enable_minhash: bool = False

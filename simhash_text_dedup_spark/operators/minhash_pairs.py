@@ -19,11 +19,12 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simhash_text_dedup_spark.config import DedupConfig
 from simhash_text_dedup_spark.functions.minhash import minhash_udf
+from simhash_text_dedup_spark.operators.skew import salted_join
 
 
 def minhash_signatures(
@@ -52,14 +53,11 @@ def minhash_candidates(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
     Hot band buckets (> cfg.band_bucket_cap members — templated
     near-identical shingle floods below the exact-dup spam threshold)
-    route through the salted sub-join, same algebra as near_pairs /
-    lsh_near_pairs: cold buckets keep the plain first-match predicate,
-    a pair whose FIRST shared band is hot emits exactly once from the
-    salted hot branch."""
-    from .skew import salt_build, salt_probe, split_hot_buckets
-
+    spread through operators/skew.salted_join, the routing every band
+    join uses; the first-shared-band predicate is signature arithmetic,
+    so routing never double-emits or drops a pair."""
     # lineage cut: the banded explode rides on the (expensive) minhash
-    # UDF and feeds the hot histogram plus both join branches; the
+    # UDF and feeds the hot histogram plus both join sides; the
     # pipeline path checkpoints sigs upstream, but direct callers
     # (e.g. the oracle entries) would otherwise re-run the UDF per
     # consumer
@@ -70,44 +68,31 @@ def minhash_candidates(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
         "doc_id", "band_idx", "band_key",
         F.expr("slice(bands, 1, band_idx)").alias("prefix"),
     ).localCheckpoint(eager=False)
-    cold, hot_rows = split_hot_buckets(
-        banded, ["band_idx", "band_key"], cfg.band_bucket_cap
+    return (
+        salted_join(
+            _band_side(banded, "a"), _band_side(banded, "b"),
+            ["band_idx", "band_key"], "a_id",
+            cfg.band_bucket_cap, cfg.salt_partitions,
+        )
+        .filter(F.col("a_id") < F.col("b_id"))
+        .filter(~_earlier_match())
+        .select("a_id", "b_id")
     )
 
-    def _sides(df):
-        left = df.select(
-            "band_idx", "band_key", F.col("doc_id").alias("a_id"),
-            F.col("prefix").alias("a_prefix"),
-        )
-        right = df.select(
-            "band_idx", "band_key", F.col("doc_id").alias("b_id"),
-            F.col("prefix").alias("b_prefix"),
-        )
-        return left, right
 
-    earlier_match = F.exists(
-        F.zip_with(
-            F.col("a_prefix"), F.col("b_prefix"), lambda x, y: x == y
-        ),
+def _band_side(banded: DataFrame, p: str, *extra: Column) -> DataFrame:
+    return banded.select(
+        "band_idx", "band_key",
+        F.col("doc_id").alias(f"{p}_id"), F.col("prefix").alias(f"{p}_prefix"),
+        *extra,
+    )
+
+
+def _earlier_match() -> Column:
+    """TRUE iff the pair shares a band before this row's band_idx."""
+    return F.exists(
+        F.zip_with(F.col("a_prefix"), F.col("b_prefix"), lambda x, y: x == y),
         lambda m: m,
-    )
-
-    def _cands(left, right, keys):
-        return (
-            left.join(right, keys)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .filter(~earlier_match)
-            .select("a_id", "b_id")
-        )
-
-    cands = _cands(*_sides(cold), ["band_idx", "band_key"])
-    lh, rh = _sides(hot_rows)
-    return cands.unionByName(
-        _cands(
-            salt_probe(lh, "a_id", cfg.salt_partitions),
-            salt_build(rh, cfg.salt_partitions),
-            ["band_idx", "band_key", "salt"],
-        )
     )
 
 
@@ -163,12 +148,12 @@ def minhash_verified_pairs_incremental(
     Scale shape: identical to the batch join — only (doc_id, band_idx,
     band_key, earlier-band prefix) rides the shuffle; the wide
     signatures join back onto the small candidate set.  Hot band
-    buckets (corpus-side histogram > band_bucket_cap) leave the plain
-    equi-join for the salted sub-join: the big corpus bucket is hashed
-    across salt_partitions by b_id, the (tiny) new rows sharing the
-    hot key are replicated per salt.  A pair is emitted only in its
-    first shared band — pure signature arithmetic, so the hot/cold
-    routing never double-emits or drops a pair.
+    buckets (corpus-side histogram > band_bucket_cap) spread through
+    operators/skew.salted_join: the big corpus bucket is hashed across
+    salt_partitions by b_id, the (tiny) new rows sharing the hot key
+    are replicated per salt.  A pair is emitted only in its first
+    shared band — pure signature arithmetic, so the routing never
+    double-emits or drops a pair.
     """
     # stale-row exclusion: every entity participates once, with its
     # CURRENT signature
@@ -176,7 +161,7 @@ def minhash_verified_pairs_incremental(
         new_sigs.select("entity_id").distinct(), "entity_id", "left_anti"
     )
     # lineage cuts: both frames sit on the (expensive) minhash UDF and
-    # feed the hot histogram + both join branches + the verify join-back
+    # feed the hot histogram + both join sides + the verify join-back
     new_side = new_sigs.select(
         "doc_id", "sig", "bands",
         F.lit(True).alias("is_new"), "is_loaded", "score",
@@ -199,55 +184,18 @@ def minhash_verified_pairs_incremental(
             F.expr("slice(_bands, 1, band_idx)").alias("prefix"),
         )
 
-    left = _banded(new_side).select(
-        "band_idx", "band_key",
-        F.col("doc_id").alias("a_id"), F.col("prefix").alias("a_prefix"),
-    )
-    right = _banded(all_side).select(
-        "band_idx", "band_key",
-        F.col("doc_id").alias("b_id"), F.col("prefix").alias("b_prefix"),
-        F.col("is_new").alias("b_is_new"),
-    )
-
-    earlier_match = F.exists(
-        F.zip_with(
-            F.col("a_prefix"), F.col("b_prefix"), lambda x, y: x == y
-        ),
-        lambda m: m,
-    )
-
-    def _cands(lf: DataFrame, rf: DataFrame, keys: list) -> DataFrame:
-        return (
-            lf.join(rf, keys)
-            .filter((~F.col("b_is_new")) | (F.col("a_id") < F.col("b_id")))
-            .filter(F.col("a_id") != F.col("b_id"))
-            .filter(~earlier_match)
-            .select("a_id", "b_id", "b_is_new")
+    cands = (
+        salted_join(
+            _band_side(_banded(all_side), "b", F.col("is_new").alias("b_is_new")),
+            _band_side(_banded(new_side), "a"),
+            ["band_idx", "band_key"], "b_id",
+            cfg.band_bucket_cap, cfg.salt_partitions,
         )
-
-    from .skew import salt_build, salt_probe
-
-    keys = ["band_idx", "band_key"]
-    hot = (
-        right.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > int(cfg.band_bucket_cap))
-        .select(*keys)
-        .localCheckpoint(eager=False)
+        .filter((~F.col("b_is_new")) | (F.col("a_id") < F.col("b_id")))
+        .filter(F.col("a_id") != F.col("b_id"))
+        .filter(~_earlier_match())
+        .select("a_id", "b_id", "b_is_new")
     )
-    cold = _cands(
-        left.join(F.broadcast(hot), keys, "left_anti"),
-        right.join(F.broadcast(hot), keys, "left_anti"),
-        keys,
-    )
-    hot_pairs = _cands(
-        salt_build(left.join(F.broadcast(hot), keys, "left_semi"),
-                   cfg.salt_partitions),
-        salt_probe(right.join(F.broadcast(hot), keys, "left_semi"),
-                   "b_id", cfg.salt_partitions),
-        keys + ["salt"],
-    )
-    cands = cold.unionByName(hot_pairs)
 
     n = cfg.minhash_perms
     a_meta = new_side.select(

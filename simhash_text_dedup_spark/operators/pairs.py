@@ -19,20 +19,24 @@ Spark-first design:
     band (a whole-stage-codegen predicate over both fingerprints) — no
     post-join dropDuplicates shuffle.
   * residual hot band buckets (> cfg.band_bucket_cap distinct
-    fingerprints) are routed to a salted sub-join (default, lossless)
-    or excluded outright (mode='drop' — lossy ONLY for pairs whose
-    every shared band is hot; the first-COLD-match predicate keeps
-    pairs that also share a cold band).  AQE skew-join handles
-    moderate imbalance.
+    fingerprints) are spread by the salted band join of
+    operators/skew.py (lossless).  AQE skew-join handles moderate
+    imbalance.
+  * the incremental round's join (`candidate_pairs`) and the banded
+    corpus layout use the same first-match predicate and Hamming
+    verify, so every SimHash pair domain is verified one way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simhash_text_dedup_spark.config import DedupConfig
 from simhash_text_dedup_spark.functions.simhash import band_entries, band_key, hamming_col
+from simhash_text_dedup_spark.operators.skew import salted_join
 
 
 def exact_groups(survivors: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -105,13 +109,17 @@ def expand_pairs(near: DataFrame, survivors: DataFrame) -> DataFrame:
     return within.unionByName(exp)
 
 
-def banded(distinct_fps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Explode each distinct fingerprint into (band, band_key) rows."""
+def banded(
+    distinct_fps: DataFrame, cfg: DedupConfig, keep: Sequence[str] = ()
+) -> DataFrame:
+    """Explode each fingerprint into (band, band_key) rows, carrying
+    the `keep` columns along."""
     return distinct_fps.select(
         "doc_id",
         "fingerprint",
+        *keep,
         F.explode(band_entries(F.col("fingerprint"), cfg.n_bands, cfg.band_bits)).alias("e"),
-    ).select("doc_id", "fingerprint", "e.band", "e.band_key")
+    ).select("doc_id", "fingerprint", *keep, "e.band", "e.band_key")
 
 
 def hot_buckets(banded_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -124,157 +132,92 @@ def hot_buckets(banded_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def _first_match_predicate(
-    cfg: DedupConfig, hot_keys_by_band: dict[int, list[int]] | None = None
-) -> F.Column:
+def first_match(band: Column, cfg: DedupConfig) -> Column:
     """Emit each pair only in its first matching band: for this row's
-    band i, every earlier band j < i must have differing keys on the two
-    fingerprints (pure bit arithmetic — no dedup shuffle needed).
-
-    In drop mode the hot buckets are excluded from the join entirely, so
-    an earlier band whose (band, key) bucket is hot must NOT suppress
-    the pair (it never met there): the predicate becomes "first COLD
-    matching band".  hot_keys_by_band[j] lists band j's hot keys."""
+    `band`, every earlier band j must have differing keys on a_fp and
+    b_fp.  Pure bit arithmetic over both fingerprints, so no dedup
+    shuffle is needed and hot/cold routing can never double-emit or
+    drop a pair."""
     pred = F.lit(True)
     for j in range(cfg.n_bands - 1):
         j_matches = band_key(F.col("a_fp"), j, cfg.n_bands, cfg.band_bits) == band_key(
             F.col("b_fp"), j, cfg.n_bands, cfg.band_bits
         )
-        if hot_keys_by_band and hot_keys_by_band.get(j):
-            j_hot = band_key(F.col("a_fp"), j, cfg.n_bands, cfg.band_bits).isin(
-                hot_keys_by_band[j]
-            )
-            j_matches = j_matches & ~j_hot
-        pred = pred & ((F.col("band") <= F.lit(j)) | ~j_matches)
+        pred = pred & ((band <= F.lit(j)) | ~j_matches)
     return pred
 
 
-def _verify(
-    joined: DataFrame,
-    cfg: DedupConfig,
-    hot_keys_by_band: dict[int, list[int]] | None = None,
-) -> DataFrame:
+def verify(joined: DataFrame, cfg: DedupConfig, band: Column | None = None) -> DataFrame:
+    """Band-join rows (a_fp, b_fp, band) kept when the fingerprints are
+    within cfg.hamming_k bits and `band` (default: the `band` column)
+    is their first matching band; adds the `hamming` column."""
+    band = F.col("band") if band is None else band
     return (
-        joined.filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("hamming", hamming_col(F.col("a_fp"), F.col("b_fp")))
-        .filter((F.col("hamming") <= cfg.hamming_k) & (F.col("hamming") >= 1))
-        .filter(_first_match_predicate(cfg, hot_keys_by_band))
-        .select("a_id", "b_id", "hamming", F.lit("near").alias("kind"))
+        joined.withColumn("hamming", hamming_col(F.col("a_fp"), F.col("b_fp")))
+        .filter(F.col("hamming") <= cfg.hamming_k)
+        .filter(first_match(band, cfg))
     )
 
 
-def _sides(b: DataFrame) -> tuple[DataFrame, DataFrame]:
-    left = b.select(
+def _side(b: DataFrame, p: str, meta: dict[str, str] | None = None) -> DataFrame:
+    """One side of a band self-join: doc_id/fingerprint as p_id/p_fp,
+    each `meta` column renamed to p_<name>."""
+    return b.select(
         "band", "band_key",
-        F.col("doc_id").alias("a_id"),
-        F.col("fingerprint").alias("a_fp"),
+        F.col("doc_id").alias(f"{p}_id"),
+        F.col("fingerprint").alias(f"{p}_fp"),
+        *[F.col(c).alias(f"{p}_{n}") for c, n in (meta or {}).items()],
     )
-    right = b.select(
-        "band", "band_key",
-        F.col("doc_id").alias("b_id"),
-        F.col("fingerprint").alias("b_fp"),
-    )
-    return left, right
 
 
 def near_pairs(distinct_fps: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Verified near-duplicate pairs between distinct fingerprints:
     (a_id, b_id, hamming, kind='near'), a_id < b_id, hamming in [1, k].
 
-    Hot band buckets (> cfg.band_bucket_cap distinct fingerprints) are
-    routed to a salted sub-join (north rule: "salted repartitioning for
-    skewed buckets"): the probe side carries a deterministic salt in the
-    join key, the build side is replicated once per salt value, so the
-    bucket's quadratic comparison spreads across salt_partitions tasks
-    instead of landing on one reducer. mode='drop' excludes hot bands
-    outright — LOSSY for pairs whose only shared bands are hot; pairs
-    that also share a cold band are kept (the first-match predicate
-    skips hot earlier bands, so the first COLD matching band emits)."""
+    The band join routes hot buckets (> cfg.band_bucket_cap distinct
+    fingerprints) through operators/skew.salted_join (north rule:
+    "salted repartitioning for skewed buckets"), so a bucket's
+    quadratic comparison spreads across salt_partitions tasks instead
+    of landing on one reducer.  hamming >= 1 because entry queries
+    feed non-distinct fingerprints, whose identical pairs are exact
+    groups, not near pairs."""
     b = banded(distinct_fps, cfg)
-    # cut lineage on the (tiny) hot set: it feeds the cold anti-join AND
-    # either the salted semi-join or the drop-mode driver collect — the
-    # checkpoint makes the band histogram aggregation run once, not per
-    # consumer
-    hot = (
-        hot_buckets(b, cfg).select("band", "band_key")
-        .localCheckpoint(eager=False)
+    joined = salted_join(
+        _side(b, "a"), _side(b, "b"), ["band", "band_key"], "a_id",
+        cfg.band_bucket_cap, cfg.salt_partitions,
+    )
+    return (
+        verify(joined.filter(F.col("a_id") < F.col("b_id")), cfg)
+        .filter(F.col("hamming") >= 1)
+        .select("a_id", "b_id", "hamming", F.lit("near").alias("kind"))
     )
 
-    if cfg.hot_bucket_mode == "drop":
-        cold = b.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
-        left, right = _sides(cold)
-        # the hot set is a histogram tail (tiny by construction); one
-        # bounded driver collect parameterizes the first-COLD-match
-        # predicate so hot earlier bands don't suppress cold emissions.
-        # The collect is CAPPED: an adversarial flood surviving the spam
-        # pass must not bloat driver memory / the Catalyst plan with
-        # unbounded isin literals (round-2 ADVICE).
-        hot_rows = hot.limit(cfg.hot_drop_key_cap + 1).collect()
-        hkb: dict[int, list[int]] | None
-        if len(hot_rows) > cfg.hot_drop_key_cap:
-            import warnings
 
-            warnings.warn(
-                f"near_pairs(drop): > {cfg.hot_drop_key_cap} hot band "
-                "buckets; falling back to the plain first-match "
-                "predicate (pairs whose earlier matching band is hot "
-                "are suppressed — extra recall loss). Consider "
-                "hot_bucket_mode='salt' or a higher band_bucket_cap.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            hkb = None
-        else:
-            hkb = {}
-            for r in hot_rows:
-                hkb.setdefault(r["band"], []).append(r["band_key"])
-        return _verify(left.join(right, ["band", "band_key"]), cfg, hkb)
+_ROUND_META = {"is_new": "is_new", "is_loaded": "loaded", "score": "score"}
 
-    # salt mode (default): ONE join keyed (band, band_key, salt) routes
-    # cold and hot buckets together — cold rows take salt 0 on both
-    # sides (meet exactly once), hot probe rows take a deterministic
-    # doc_id-derived salt and hot build rows replicate across all salt
-    # values (each hot pair meets exactly at the probe row's salt).
-    # Replaces the former cold-join + salted-sub-join + union: the
-    # banded frame is evaluated twice (probe + build) instead of five
-    # times (histogram feeds from the same scan either way), and the
-    # pair stream needs one exchange pair instead of two (guide §2.4).
-    # A (band, band_key) bucket is entirely hot or entirely cold, so
-    # salt-0 cold rows can never meet a hot build replica.
-    s = cfg.salt_partitions
-    flagged = b.join(
-        F.broadcast(hot.withColumn("_hot", F.lit(True))),
-        ["band", "band_key"],
-        "left",
+
+def candidate_pairs(
+    new_side: DataFrame, all_side: DataFrame, cfg: DedupConfig
+) -> DataFrame:
+    """Incremental candidate generation + Hamming verify (pure; no
+    checkpointing).  Both inputs carry (doc_id, fingerprint, is_new,
+    is_loaded, score).  Pair domain: new x new emitted once (a < b),
+    new x old always kept (direction rule E5, DeDupMapper.java:220-226),
+    old x old never compared; each pair emitted only in its first
+    matching band.
+
+    Hot buckets come from the corpus side's histogram: its rows spread
+    across salt_partitions by b_id, and the (tiny: new rows sharing a
+    hot key) new side replicates per salt."""
+    keep = list(_ROUND_META)
+    joined = salted_join(
+        _side(banded(all_side, cfg, keep), "b", _ROUND_META),
+        _side(banded(new_side, cfg, keep), "a", _ROUND_META),
+        ["band", "band_key"], "b_id", cfg.band_bucket_cap, cfg.salt_partitions,
     )
-    probe = flagged.withColumn(
-        "salt",
-        F.when(
-            F.col("_hot").isNotNull(),
-            F.pmod(F.xxhash64("doc_id"), F.lit(s)),
-        )
-        .otherwise(F.lit(0))
-        .cast("int"),
-    )
-    build = flagged.withColumn(
-        "salt",
-        F.explode(
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.array(*[F.lit(i) for i in range(s)]),
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    )
-    left = probe.select(
-        "band", "band_key", "salt",
-        F.col("doc_id").alias("a_id"),
-        F.col("fingerprint").alias("a_fp"),
-    )
-    right = build.select(
-        "band", "band_key", "salt",
-        F.col("doc_id").alias("b_id"),
-        F.col("fingerprint").alias("b_fp"),
-    )
-    return _verify(
-        left.join(right, ["band", "band_key", "salt"]), cfg
+    domain = (~F.col("b_is_new")) | (F.col("a_id") < F.col("b_id"))
+    return verify(joined.filter(domain & (F.col("a_id") != F.col("b_id"))), cfg).select(
+        "a_id", "b_id", "hamming",
+        "a_is_new", "b_is_new", "a_loaded", "b_loaded",
+        "a_score", "b_score",
     )

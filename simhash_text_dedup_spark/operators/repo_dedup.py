@@ -39,8 +39,8 @@ Scale shape (10^12 files, ~10^8 repos):
     one combiner per input partition, never a hot reducer;
   * the band self-join shuffles B slim rows per repo; hot band
     buckets (e.g. the shared signature of all single-boilerplate-file
-    repos) route through the salted sub-join (operators/skew.py),
-    same algebra as the file-level band joins;
+    repos) spread through operators/skew.salted_join, the routing of
+    the file-level band joins;
   * exact verification transports each candidate pair's file-digest
     lists via two joins whose keys — (a_repo) then (b_repo, digest) —
     are unique on the digest side, so a digest shared by thousands of
@@ -69,8 +69,8 @@ class RepoDedupConfig:
     # exact-verify keep thresholds (integer permille; OR-combined)
     jaccard_permille: int = 500
     containment_permille: int = 900
-    # band buckets holding more repos than this route via the salted
-    # sub-join (operators/skew.py) instead of the plain band join
+    # band buckets holding more repos than this are spread across
+    # salt_partitions tasks (operators/skew.salted_join)
     band_bucket_cap: int = 1000
     salt_partitions: int = 16
     # connected-components knobs (repo ids are 60-bit md5 of the name)
@@ -147,9 +147,9 @@ def fork_candidates(
     """Distinct candidate repo pairs (a_repo < b_repo) sharing >= 1
     band, each pair emitted ONLY at its first shared band — the
     codegen dedup predicate of minhash_candidates (no dropDuplicates
-    exchange over the join output), with hot band buckets routed
-    through the salted sub-join (operators/skew.py)."""
-    from .skew import salt_build, salt_probe, split_hot_buckets
+    exchange over the join output), with hot band buckets spread by
+    operators/skew.salted_join."""
+    from .skew import salted_join
 
     banded = sigs.select(
         "repo",
@@ -161,42 +161,25 @@ def fork_candidates(
         "band_key",
         F.expr("slice(bands, 1, band_idx)").alias("prefix"),
     ).localCheckpoint(eager=False)
-    cold, hot_rows = split_hot_buckets(
-        banded, ["band_idx", "band_key"], cfg.band_bucket_cap
-    )
 
-    def _sides(df):
-        left = df.select(
-            "band_idx", "band_key", F.col("repo").alias("a_repo"),
-            F.col("prefix").alias("a_prefix"),
+    def _side(p):
+        return banded.select(
+            "band_idx", "band_key", F.col("repo").alias(f"{p}_repo"),
+            F.col("prefix").alias(f"{p}_prefix"),
         )
-        right = df.select(
-            "band_idx", "band_key", F.col("repo").alias("b_repo"),
-            F.col("prefix").alias("b_prefix"),
-        )
-        return left, right
 
     earlier_match = F.exists(
         F.zip_with(F.col("a_prefix"), F.col("b_prefix"), lambda x, y: x == y),
         lambda m: m,
     )
-
-    def _cands(left, right, keys):
-        return (
-            left.join(right, keys)
-            .filter(F.col("a_repo") < F.col("b_repo"))
-            .filter(~earlier_match)
-            .select("a_repo", "b_repo")
+    return (
+        salted_join(
+            _side("a"), _side("b"), ["band_idx", "band_key"], "a_repo",
+            cfg.band_bucket_cap, cfg.salt_partitions,
         )
-
-    cands = _cands(*_sides(cold), ["band_idx", "band_key"])
-    lh, rh = _sides(hot_rows)
-    return cands.unionByName(
-        _cands(
-            salt_probe(lh, "a_repo", cfg.salt_partitions),
-            salt_build(rh, cfg.salt_partitions),
-            ["band_idx", "band_key", "salt"],
-        )
+        .filter(F.col("a_repo") < F.col("b_repo"))
+        .filter(~earlier_match)
+        .select("a_repo", "b_repo")
     )
 
 

@@ -167,11 +167,12 @@ def semdedup(
     salted sub-join instead (the probe side carries a deterministic
     salt, the build side is replicated once per salt value), spreading
     the quadratic block across `salt_partitions` tasks — the same
-    remedy as the hot band buckets in operators/pairs.py.  Routing is
-    correctness-independent: every cluster is entirely cold or
-    entirely hot, and within a hot cluster each (a, b) pair meets in
+    histogram and salts as every band join (operators/skew.py).
+    Routing is correctness-independent: every cluster is entirely cold
+    or entirely hot, and within a hot cluster each (a, b) pair meets in
     exactly one salt."""
     from .similarity import _spread
+    from .skew import all_salts, hot_keys, salt_of
 
     # fan a narrow single-file scan across the cores so the Arrow
     # assignment UDF doesn't run on 1-2 tasks (no-op at cluster scale)
@@ -195,26 +196,17 @@ def semdedup(
     # combination meets exactly once and no single task holds a
     # |hot list|^2 block.  The former cold-screen + hot-screen + union
     # paid the shuffle and the Arrow stage twice.
-    s = int(salt_partitions)
-    hot = (
-        assigned.groupBy("list_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > int(list_size_cap))
-        .select("list_id")
-        .withColumn("_hot", F.lit(True))
-        .localCheckpoint(eager=False)
+    hot = hot_keys(assigned, ["list_id"], list_size_cap)
+    flagged = assigned.join(
+        F.broadcast(hot.withColumn("_hot", F.lit(True))), "list_id", "left"
     )
-    flagged = assigned.join(F.broadcast(hot), "list_id", "left")
     probe = flagged.select(
         "vec_id",
         "v",
         "list_id",
         "centroid_sim",
-        F.when(
-            F.col("_hot").isNotNull(), F.pmod(F.xxhash64("vec_id"), F.lit(s))
-        )
+        F.when(F.col("_hot").isNotNull(), salt_of("vec_id", salt_partitions))
         .otherwise(F.lit(0))
-        .cast("int")
         .alias("salt"),
         F.lit(True).alias("is_probe"),
         F.col("_hot").isNull().alias("is_build"),
@@ -224,7 +216,7 @@ def semdedup(
         "v",
         "list_id",
         "centroid_sim",
-        F.explode(F.array(*[F.lit(i) for i in range(s)])).alias("salt"),
+        F.explode(all_salts(salt_partitions)).alias("salt"),
         F.lit(False).alias("is_probe"),
         F.lit(True).alias("is_build"),
     )

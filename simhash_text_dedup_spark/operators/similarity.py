@@ -231,18 +231,15 @@ def lsh_near_pairs(
     follows bucket sizes, never |corpus|^2.
 
     Hot band buckets (> bucket_cap members — near-identical embedding
-    floods share every band) route through a salted sub-join exactly
-    like the SimHash join (operators/pairs.py): cold buckets keep the
-    plain first-match predicate (a pair whose FIRST shared band is hot
-    emits from the hot branch, never twice), the hot probe side
-    carries a deterministic salt and the build side replicates per
-    salt, spreading the quadratic block across salt_partitions
-    tasks."""
-    from .skew import salt_build, salt_probe, split_hot_buckets
+    floods share every band) spread across salt_partitions tasks
+    through operators/skew.salted_join, the routing of every band
+    join; the first-match predicate is key arithmetic, so routing
+    never double-emits or drops a pair."""
+    from .skew import salted_join
 
     sketch = sketch_fn or hyperplane_sketch_udf(dim, n_planes, n_bands, seed)
     # lineage cut: the sketch (Arrow UDF) output feeds the hot
-    # histogram, both join branches AND the verify join-backs — without
+    # histogram, both join sides AND the verify join-backs — without
     # it the UDF would re-run per consumer (same reason as ivf_probe /
     # semdedup)
     # the vector norm is a per-VECTOR constant: hoist it next to the
@@ -266,45 +263,29 @@ def lsh_near_pairs(
     cb = c.select(
         "vec_id", "keys", F.posexplode("keys").alias("pos", "band_key")
     )
-    cold_b, hot_b = split_hot_buckets(cb, ["pos", "band_key"], bucket_cap)
 
-    def _sides(df):
-        a = df.select(
-            F.col("vec_id").alias("a_id"),
-            F.col("keys").alias("akeys"),
-            F.col("pos").alias("apos"),
+    def _side(p):
+        return cb.select(
+            F.col("vec_id").alias(f"{p}_id"),
+            F.col("keys").alias(f"{p}keys"),
+            "pos",
             "band_key",
         )
-        b = df.select(
-            F.col("vec_id").alias("b_id"),
-            F.col("keys").alias("bkeys"),
-            F.col("pos").alias("bpos"),
-            "band_key",
-        )
-        return a, b
 
-    first_match = _first_match_only(
-        F.col("akeys"), F.col("bkeys"), F.col("apos"), n_bands
-    )
-
-    def _cands(a, b, keys):
-        return (
-            a.join(b, keys)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .filter(F.col("apos") == F.col("bpos"))  # band-distinct keys
-            .filter(first_match)
-            .select("a_id", "b_id")
+    # keyed on (pos, band_key): a candidate shares a key at the SAME
+    # band position
+    cands = (
+        salted_join(
+            _side("a"), _side("b"), ["pos", "band_key"], "a_id",
+            bucket_cap, salt_partitions,
         )
-
-    ca, cb_side = _sides(cold_b)
-    cands = _cands(ca, cb_side, ["band_key"])
-    ha, hb = _sides(hot_b)
-    cands = cands.unionByName(
-        _cands(
-            salt_probe(ha, "a_id", salt_partitions),
-            salt_build(hb, salt_partitions),
-            ["band_key", "salt"],
+        .filter(F.col("a_id") < F.col("b_id"))
+        .filter(
+            _first_match_only(
+                F.col("akeys"), F.col("bkeys"), F.col("pos"), n_bands
+            )
         )
+        .select("a_id", "b_id")
     )
     dot = F.aggregate(
         F.zip_with(F.col("a_v"), F.col("b_v"), lambda x, y: x * y),

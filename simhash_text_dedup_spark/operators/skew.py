@@ -1,62 +1,83 @@
-"""Shared hot-bucket routing mechanics for quadratic self-joins.
+"""Hot-bucket routing for every quadratic band join.
 
-Every corpus self-join on a bucket key (SimHash bands, MinHash bands,
-LSH sketch bands, SemDeDup clusters) has the same skew hazard — one
+Every corpus join on a bucket key (SimHash bands, MinHash bands, LSH
+sketch bands, the repo-fork bands) has the same skew hazard: one
 over-populated bucket serializes its |bucket|^2 comparison into a
-single task — and the same remedy: split rows into cold/hot by a
-(tiny, broadcast) over-cap histogram, join cold buckets plainly, and
-join hot buckets on an extra salt column (probe side hashed, build
-side replicated per salt) so the quadratic block spreads across
-`salt_partitions` tasks.  Routing is correctness-independent as long
-as bucket membership is row-determined: every row is entirely cold or
-entirely hot, and within a hot bucket each (a, b) pair meets in
-exactly one salt.
+single task.  `salted_join` is the one remedy, used by every band
+join in the package.  Keys whose build-side bucket holds more than
+`cap` rows (a tiny histogram tail, cut once and broadcast) are hot;
+the join runs on keys + salt, where
 
-This module carries the mechanics ONCE for the self-join family
-(minhash_pairs / semdedup / lsh_near_pairs).  The SimHash path in
-operators/pairs.py keeps its own routing: its cap counts DISTINCT
-fingerprints per bucket (not rows) and interacts with the spam
-pre-pass and drop mode — different semantics, deliberately not
-unified."""
+  * hot build rows take salt pmod(xxhash64(build_id), salt_partitions),
+  * hot probe rows are replicated once per salt value,
+  * cold rows take salt 0 on both sides.
+
+Each (build, probe) pair meets in exactly one salt: a bucket is
+entirely hot or entirely cold, so a salt-0 cold row never meets a hot
+replica.  Routing therefore never changes the join's result, only how
+its work spreads: one exchange pair, each side evaluated once, and a
+hot bucket's block split across `salt_partitions` tasks.
+
+SemDeDup's within-cluster screen is a grouped pass, not a join; it
+salts its hot clusters with the same `hot_keys`, `salt_of` and
+`all_salts`.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def split_hot_buckets(
-    df: DataFrame, keys: list, cap: int
-) -> tuple[DataFrame, DataFrame]:
-    """(cold, hot): rows split by whether their bucket (the `keys`
-    tuple) holds more than `cap` rows.  The over-cap histogram is one
-    row per hot bucket — lineage-cut and broadcast to both branches."""
-    hot = (
+def hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The `keys` tuples holding more than `cap` rows of `df`: a tiny
+    histogram tail, lineage-cut so the aggregation runs once however
+    many sides read it."""
+    return (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > int(cap))
         .select(*keys)
         .localCheckpoint(eager=False)
     )
-    return (
-        df.join(F.broadcast(hot), keys, "left_anti"),
-        df.join(F.broadcast(hot), keys, "left_semi"),
-    )
 
 
-def salt_probe(df: DataFrame, id_col: str, salt_partitions: int) -> DataFrame:
-    """Probe side of the salted sub-join: one deterministic salt per
-    row, derived from the row's id."""
-    return df.withColumn(
+def salt_of(id_col: str, salt_partitions: int) -> Column:
+    """A hot row's salt: pmod(xxhash64(id), salt_partitions)."""
+    return F.pmod(F.xxhash64(id_col), F.lit(int(salt_partitions))).cast("int")
+
+
+def all_salts(salt_partitions: int) -> Column:
+    """Every salt value, for the replicated side of a hot bucket."""
+    return F.array(*[F.lit(i) for i in range(int(salt_partitions))])
+
+
+def salted_join(
+    build: DataFrame,
+    probe: DataFrame,
+    keys: list[str],
+    build_id: str,
+    cap: int,
+    salt_partitions: int,
+    hot: DataFrame | None = None,
+) -> DataFrame:
+    """Inner equi-join of `build` and `probe` on `keys` (plus a `salt`
+    column the caller may ignore), hot keys spread by salt.
+
+    hot: precomputed frame of the hot `keys` tuples (e.g. a layout's
+    stats table); by default the build side's over-`cap` histogram."""
+    if hot is None:
+        hot = hot_keys(build, keys, cap)
+    flag = F.broadcast(hot.select(*keys, F.lit(True).alias("_hot")))
+    is_hot = F.col("_hot").isNotNull()
+    build = build.join(flag, keys, "left").withColumn(
         "salt",
-        F.pmod(F.xxhash64(id_col), F.lit(int(salt_partitions))).cast("int"),
-    )
-
-
-def salt_build(df: DataFrame, salt_partitions: int) -> DataFrame:
-    """Build side of the salted sub-join: replicated once per salt
-    value, so every probe row meets every build row exactly once."""
-    return df.withColumn(
+        F.when(is_hot, salt_of(build_id, salt_partitions)).otherwise(F.lit(0)),
+    ).drop("_hot")
+    probe = probe.join(flag, keys, "left").withColumn(
         "salt",
-        F.explode(F.array(*[F.lit(i) for i in range(int(salt_partitions))])),
-    )
+        F.explode(
+            F.when(is_hot, all_salts(salt_partitions)).otherwise(F.array(F.lit(0)))
+        ),
+    ).drop("_hot")
+    return build.join(probe, [*keys, "salt"])

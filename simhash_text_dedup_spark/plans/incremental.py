@@ -31,12 +31,13 @@ Semantics reproduced here:
                     over the round's pairs, parallel per component
                     (SelectLogicReducer.java:56-104)
 
-Scale shape: the probe side is the full corpus fingerprint table (read
-from the previous round's checkpoint — parquet/Iceberg snapshot); only
-band keys of the NEW batch build the join's left side, so the shuffle is
-O(|new| + matching buckets of |corpus|), not O(|corpus|^2).  When the
-new batch is small it broadcasts (Catalyst/AQE decides; the reference's
-in-heap memtable is exactly a hand-rolled broadcast join, SURVEY §2.3 J1).
+Scale shape (operators/pairs.candidate_pairs): one side is the full
+corpus fingerprint table (read from the previous round's checkpoint —
+parquet/Iceberg snapshot); only band keys of the NEW batch probe it, so
+the shuffle is O(|new| + matching buckets of |corpus|), not
+O(|corpus|^2).  When the new batch is small it broadcasts
+(Catalyst/AQE decides; the reference's in-heap memtable is exactly a
+hand-rolled broadcast join, SURVEY §2.3 J1).
 """
 
 from __future__ import annotations
@@ -47,12 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simhash_text_dedup_spark.config import DedupConfig
-from simhash_text_dedup_spark.functions.simhash import (
-    band_entries,
-    band_key,
-    hamming_col,
-)
 from simhash_text_dedup_spark.operators.cluster import connected_components
+from simhash_text_dedup_spark.operators.pairs import candidate_pairs
 from simhash_text_dedup_spark.plans.pipeline import (
     Checkpointer,
     fingerprint_stage,
@@ -77,116 +74,6 @@ class IncrementalResult:
     # after the round commits, the way new_fingerprints feed the
     # fingerprint base
     new_signatures: DataFrame | None = None
-
-
-def _banded(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return fps.select(
-        "doc_id",
-        "fingerprint",
-        "is_new",
-        "is_loaded",
-        "score",
-        F.explode(band_entries(F.col("fingerprint"), cfg.n_bands, cfg.band_bits)).alias("e"),
-    ).select(
-        "doc_id", "fingerprint", "is_new", "is_loaded", "score", "e.band", "e.band_key"
-    )
-
-
-def candidate_pairs(
-    new_side: DataFrame, all_side: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """Incremental candidate generation + Hamming verify (pure; no
-    checkpointing).  Both inputs carry (doc_id, fingerprint, is_new,
-    is_loaded, score).  Pair domain: new x new emitted once (a < b),
-    new x old always kept (direction rule E5, DeDupMapper.java:220-226),
-    old x old never compared; each pair emitted only in its first
-    matching band (same zero-shuffle predicate as the batch join)."""
-    left = _banded(new_side, cfg).select(
-        "band", "band_key",
-        F.col("doc_id").alias("a_id"), F.col("fingerprint").alias("a_fp"),
-        F.col("is_new").alias("a_is_new"), F.col("is_loaded").alias("a_loaded"),
-        F.col("score").alias("a_score"),
-    )
-    right = _banded(all_side, cfg).select(
-        "band", "band_key",
-        F.col("doc_id").alias("b_id"), F.col("fingerprint").alias("b_fp"),
-        F.col("is_new").alias("b_is_new"), F.col("is_loaded").alias("b_loaded"),
-        F.col("score").alias("b_score"),
-    )
-
-    def _pairs(joined: DataFrame) -> DataFrame:
-        joined = joined.filter(
-            (~F.col("b_is_new")) | (F.col("a_id") < F.col("b_id"))
-        )
-        first_match = F.lit(True)
-        for j in range(cfg.n_bands - 1):
-            j_matches = band_key(
-                F.col("a_fp"), j, cfg.n_bands, cfg.band_bits
-            ) == band_key(F.col("b_fp"), j, cfg.n_bands, cfg.band_bits)
-            first_match = first_match & (
-                (F.col("band") <= F.lit(j)) | ~j_matches
-            )
-        return (
-            joined.withColumn(
-                "hamming", hamming_col(F.col("a_fp"), F.col("b_fp"))
-            )
-            .filter(
-                (F.col("hamming") <= cfg.hamming_k)
-                & (F.col("a_id") != F.col("b_id"))
-            )
-            .filter(first_match)
-            .select(
-                "a_id", "b_id", "hamming",
-                "a_is_new", "b_is_new", "a_loaded", "b_loaded",
-                "a_score", "b_score",
-            )
-        )
-
-    if cfg.hot_bucket_mode != "salt":
-        # AQE's skew-join backstop is the only guard (adequate for
-        # moderate imbalance; 'salt' is the default)
-        return _pairs(left.join(right, ["band", "band_key"]))
-
-    # --- hot-bucket routing (round-3 VERDICT #2): corpus-side band
-    # buckets above band_bucket_cap must not funnel a hot key into few
-    # tasks.  ONE join keyed (band, band_key, salt) routes cold and hot
-    # buckets together: cold rows take salt 0 on both sides, hot-bucket
-    # corpus rows spread across salt_partitions by b_id, and the (tiny:
-    # new rows sharing a hot key) probe side replicates per salt — each
-    # pair meets exactly once, and each banded side is evaluated once
-    # instead of twice (the former cold-join + salted-sub-join + union;
-    # guide §2.4).  The first-matching-band predicate is
-    # routing-independent fingerprint arithmetic, so the routing never
-    # double-emits or drops a pair; a bucket is entirely hot or cold,
-    # so salt-0 rows never meet a hot replica.
-    from simhash_text_dedup_spark.operators.pairs import hot_buckets
-
-    hot = (
-        hot_buckets(right.select("band", "band_key"), cfg)
-        .select("band", "band_key")
-        .withColumn("_hot", F.lit(True))
-        .localCheckpoint(eager=False)
-    )
-    s = cfg.salt_partitions
-    lh = left.join(F.broadcast(hot), ["band", "band_key"], "left").withColumn(
-        "salt",
-        F.explode(
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.array(*[F.lit(i) for i in range(s)]),
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    ).drop("_hot")
-    rh = right.join(F.broadcast(hot), ["band", "band_key"], "left").withColumn(
-        "salt",
-        F.when(
-            F.col("_hot").isNotNull(),
-            F.pmod(F.xxhash64("b_id"), F.lit(s)),
-        )
-        .otherwise(F.lit(0))
-        .cast("int"),
-    ).drop("_hot")
-    return _pairs(lh.join(rh, ["band", "band_key", "salt"]))
 
 
 def unload_list(new_fps: DataFrame, base_fps: DataFrame) -> DataFrame:

@@ -2,7 +2,7 @@
 join accelerator for incremental rounds, with INCREMENTAL MAINTENANCE.
 
 At 10^12 files the dominant RECURRING cost of an incremental round is
-the corpus side of the band join (plans/incremental.candidate_pairs):
+the corpus side of the band join (operators/pairs.candidate_pairs):
 every round re-explodes the full fingerprint table into band rows and
 re-SHUFFLES them on the band key, even though both are write-once
 computations — a fingerprint's band rows never change, and the
@@ -45,7 +45,7 @@ Layout for a corpus table `T` (all Spark saved tables):
     never, each pair only in its first matching band — with the cold
     corpus side read co-located (NO Exchange; the only shuffle moves
     the small NEW batch) and hot buckets routed through the salted
-    sub-join (same recipe as operators/pairs.near_pairs).
+    band join every band join uses (operators/skew.salted_join).
 
 Hot/cold routing is a pure PERFORMANCE split: each corpus row lives in
 exactly one of T / T__hot, the join unions both sides, and the
@@ -65,7 +65,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simhash_text_dedup_spark.config import DedupConfig
-from simhash_text_dedup_spark.functions.simhash import band_key, hamming_col
+from simhash_text_dedup_spark.functions.simhash import band_key
+from simhash_text_dedup_spark.operators.pairs import candidate_pairs, verify
+from simhash_text_dedup_spark.operators.skew import salted_join
 from simhash_text_dedup_spark.sources.io import write_bucketed_table
 
 _BANDED_SCHEMA = (
@@ -335,38 +337,18 @@ def maintain_banded_corpus(
     return "rebuild"
 
 
-def _first_match(cfg: DedupConfig) -> Column:
-    """Emit each pair only in its first matching band: this row's band
-    (bkey >> band_bits) must be the smallest j where the two
-    fingerprints agree — same zero-shuffle predicate as
-    candidate_pairs, independent of hot/cold routing (pure fingerprint
-    arithmetic, so the split can never double-emit or drop a pair)."""
-    band = F.shiftrightunsigned(F.col("bkey"), cfg.band_bits)
-    pred = F.lit(True)
-    for j in range(cfg.n_bands - 1):
-        j_matches = band_key(F.col("a_fp"), j, cfg.n_bands, cfg.band_bits) == band_key(
-            F.col("b_fp"), j, cfg.n_bands, cfg.band_bits
-        )
-        pred = pred & ((band <= F.lit(j)) | ~j_matches)
-    return pred
-
-
 def _pair_select(joined: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return (
-        joined.withColumn("hamming", hamming_col(F.col("a_fp"), F.col("b_fp")))
-        .filter((F.col("hamming") <= cfg.hamming_k) & (F.col("a_id") != F.col("b_id")))
-        .filter(_first_match(cfg))
-        .select(
-            "a_id",
-            "b_id",
-            "hamming",
-            F.lit(True).alias("a_is_new"),
-            F.lit(False).alias("b_is_new"),
-            "a_loaded",
-            F.lit(True).alias("b_loaded"),
-            "a_score",
-            "b_score",
-        )
+    band = F.shiftrightunsigned(F.col("bkey"), cfg.band_bits)
+    return verify(joined.filter(F.col("a_id") != F.col("b_id")), cfg, band).select(
+        "a_id",
+        "b_id",
+        "hamming",
+        F.lit(True).alias("a_is_new"),
+        F.lit(False).alias("b_is_new"),
+        "a_loaded",
+        F.lit(True).alias("b_loaded"),
+        "a_score",
+        "b_score",
     )
 
 
@@ -378,7 +360,7 @@ def candidate_pairs_banded(
 ) -> DataFrame:
     """Incremental candidate generation against the SAVED banded
     corpus: identical pair set and schema to
-    plans/incremental.candidate_pairs(new_side, new_side ∪ live-old)
+    operators/pairs.candidate_pairs(new_side, new_side ∪ live-old)
     — parity pinned by tests — but the cold corpus side is read
     co-located (no Exchange) and hot buckets go through the salted
     exchange sub-join (a hot bucket inside the co-located read would
@@ -391,8 +373,6 @@ def candidate_pairs_banded(
     batch's re-crawled entities (broadcast anti-join on entity_id;
     pass entity_id inside new_side when re-crawls are possible).
     """
-    from simhash_text_dedup_spark.plans.incremental import candidate_pairs
-
     # --- new x new: the batch is small; the plain in-memory join
     nn = candidate_pairs(new_side, new_side, cfg)
 
@@ -429,21 +409,22 @@ def candidate_pairs_banded(
         left.join(_right(spark.table(banded_corpus_table)), "bkey"), cfg
     )
 
-    # --- hot buckets: salted exchange sub-join (operators/pairs.py
-    # recipe): corpus rows spread across salt_partitions by b_id, the
-    # (tiny: new-side rows with a hot bkey) probe side replicated per
-    # salt value — the bucket's quadratic comparison fans out instead
-    # of landing on one task
-    hot_rows = _right(spark.table(f"{banded_corpus_table}__hot"))
-    s = cfg.salt_partitions
-    hot_keys = _hot_keys(spark, banded_corpus_table, cfg)
-    lh = (
-        left.join(F.broadcast(hot_keys), "bkey", "left_semi")
-        .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(s)])))
+    # --- hot buckets: the salted band join of operators/skew.py, with
+    # the hot keys read from the stats table: corpus rows spread across
+    # salt_partitions by b_id, new-side rows with a hot bkey replicate
+    # per salt — the bucket's quadratic comparison fans out instead of
+    # landing on one task
+    hot = _pair_select(
+        salted_join(
+            _right(spark.table(f"{banded_corpus_table}__hot")),
+            left,
+            ["bkey"],
+            "b_id",
+            cfg.band_bucket_cap,
+            cfg.salt_partitions,
+            hot=_hot_keys(spark, banded_corpus_table, cfg),
+        ),
+        cfg,
     )
-    rh = hot_rows.withColumn(
-        "salt", F.pmod(F.xxhash64("b_id"), F.lit(s)).cast("int")
-    )
-    hot = _pair_select(lh.join(rh, ["bkey", "salt"]), cfg)
 
     return nn.unionByName(cold).unionByName(hot)

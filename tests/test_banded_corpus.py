@@ -152,6 +152,33 @@ def test_hot_bucket_routing_parity_and_layout(spark, db):
     assert (1000, 7, 1) in {(a, b, h) for a, b, h in got}  # hot-bucket pair found
 
 
+def test_hot_rows_meet_when_read_under_a_higher_cap(spark, db):
+    """Rows a layout moved to __hot under a lower band_bucket_cap are
+    not hot for a round read under a higher cap; their pairs must
+    still be found, not dropped."""
+    base = 0x2B3C << 44  # band 0 shared by the crowd
+    rows = [(i, base | (i << 28) | (i << 12) | i) for i in range(40)]
+    corpus = spark.createDataFrame(rows, "doc_id long, fingerprint long").select(
+        "doc_id", F.col("doc_id").alias("entity_id"), "fingerprint",
+        F.lit(1.0).alias("score"),
+    )
+    # a 1-bit mutant of crowd member 7: first matching band is band 0
+    new_side = spark.createDataFrame(
+        [(1000, rows[7][1] ^ (1 << 2))], "doc_id long, fingerprint long"
+    ).select(
+        "doc_id", "fingerprint", F.lit(True).alias("is_new"),
+        F.lit(False).alias("is_loaded"), F.lit(2.0).alias("score"),
+    )
+    write_banded_corpus(corpus, f"{db}.capb", CFG.with_(band_bucket_cap=10), n_buckets=4)
+    tagged = corpus.select(
+        "doc_id", "fingerprint", F.lit(False).alias("is_new"),
+        F.lit(True).alias("is_loaded"), "score",
+    ).unionByName(new_side)
+    got = _pair_set(candidate_pairs_banded(spark, new_side, f"{db}.capb", CFG))
+    assert got == _pair_set(candidate_pairs(new_side, tagged, CFG))
+    assert (1000, 7, 1) in got
+
+
 def _merged(corpus, batch_fps):
     """Reference semantics of corpus-after-commit: re-crawled entities'
     old rows replaced by the batch's rows."""

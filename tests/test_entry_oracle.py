@@ -127,3 +127,35 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+# the driver records the first DRIVER_WINDOW entries, in dict order
+PINNED_WINDOW = [
+    'simhash_fingerprints', 'simhash_clusters',
+    'simhash_clusters_greedy', 'incremental_round',
+    'doc_fingerprint_xxhash', 'band_join_pairs', 'cc_clusters',
+    'greedy_actions', 'radius_sweep', 'cluster_agreement',
+    'cluster_size_histogram', 'exact_dup_groups', 'spam_kill_list',
+    'incremental_pairs', 'incremental_pairs_banded',
+    'incremental_round_lists', 'snapshot_merge', 'snapshot_diff',
+    'minhash_pairs', 'minhash_band_pairs', 'incremental_minhash_pairs',
+    'containment_pairs', 'substring_lcs', 'substring_verified',
+    'edit_distance_pairs', 'embedding_topk_lsh_signbit',
+    'embedding_topk_ivf_axes', 'embedding_topk_ivf_disk_axes',
+    'embedding_near_pairs', 'semdedup', 'semantic_decontaminate',
+    'tiered_dedup', 'tiered_report', 'dup_spans', 'dup_span_strip',
+    'decontaminate', 'quality_filter', 'lm_quality', 'lm_quality_ref',
+    'leakage_safe_split', 'quality_classifier', 'bloom_prefilter',
+    'repo_fork_pairs', 'repo_dedup_actions', 'head_snapshot',
+    'repo_context', 'chunk_documents', 'render_formats',
+    'bucketed_join', 'scan_filter_project',
+]
+
+
+def test_driver_surface_is_pinned():
+    """Deleting code must not shrink or reorder the driver's surface:
+    86 entries, every oracle names an entry, the window in order."""
+    keys = list(entry_mod.queries().keys())
+    assert len(keys) == 86
+    assert len(ORACLES) == 83 and set(ORACLES) <= set(keys)
+    assert keys[:DRIVER_WINDOW] == PINNED_WINDOW

@@ -354,3 +354,35 @@ def test_incremental_batch_scanned_once(spark, tmp_path):
     assert len(set(re.findall(r"\((\d+)\) Scan parquet", plan))) == 1, plan
     assert "Join" not in plan, plan
     assert "entity_id" in res.new_fingerprints.columns
+
+
+def _salt_joins(plan: str) -> int:
+    import re
+
+    return len(re.findall(r"^Left keys \[\d+\]: \[.*\bsalt#", plan, re.M))
+
+
+def test_band_joins_route_hot_buckets_in_one_salted_join(spark):
+    """Every band join takes one routing shape (operators/skew.py):
+    one join keyed on salt, with cold and hot buckets together — no
+    cold join + salted hot join + Union."""
+    from simhash_text_dedup_spark.operators.minhash_pairs import minhash_candidates
+    from simhash_text_dedup_spark.operators.similarity import lsh_near_pairs
+
+    sigs = spark.createDataFrame(
+        [(i, [i % 7, i % 11, i % 13, i]) for i in range(50)],
+        "doc_id long, bands array<bigint>",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0, float(i)]) for i in range(50)],
+        "vec_id long, embedding array<float>",
+    )
+    # a JVM-side sketch keeps a Python runner out of the plan
+    sketch = lambda e: F.transform(e, lambda x: F.floor(x).cast("long"))  # noqa: E731
+    for df in (
+        minhash_candidates(sigs, DedupConfig()),
+        lsh_near_pairs(vecs, threshold=0.9, n_bands=4, sketch_fn=sketch),
+    ):
+        plan = _plan(df)
+        assert "Union" not in plan, plan
+        assert _salt_joins(plan) == 1, plan

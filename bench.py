@@ -8,11 +8,13 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": ...,
    "dedup_files_per_sec": ...}
 
---scaling mode: runs the identical dedup job at two parallelism levels
-(local[8] vs local[32], partitions scaled 4x) on the same synthetic
-source-code corpus and reports throughput at both plus scaling
-efficiency — the sandbox stand-in for the north rule's N vs 4N executor
-criterion (no real cluster here; see BENCH/BASELINE.md).
+--scaling mode: runs the identical dedup job on the same synthetic
+source-code corpus at local[lo] and local[hi], where hi is the cores
+get_spark picks and lo = max(1, hi // 4), partitions scaled with the
+cores.  Three interleaved pairs; prints one JSON line with each pair's
+scaling efficiency and their median.  This is the local stand-in for
+the north rule's N vs 4N executor criterion (no cluster here; see
+BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -150,8 +152,8 @@ def main_default() -> None:
     warm_run = _session_warmup(spark, corpus, cpus)
     # The UDF-heavy dedup stage speeds up monotonically over the first
     # MINUTES of a process (measured 54 -> 60 -> 25 -> 13 -> 9 s on
-    # identical runs: THP hugepage collapse + deep JIT on a DRAM-bound
-    # stage; SQL queries hold steady throughout — see BENCH/BASELINE.md).
+    # identical runs on a 32-core host: THP hugepage collapse + deep JIT
+    # on a DRAM-bound stage; SQL queries held steady throughout).
     # Capability = the best warmed run: sample until 6 measured runs or
     # a 4-minute budget, min over ALL samples incl. the warm pass.
     samples = [warm_run]
@@ -161,13 +163,9 @@ def main_default() -> None:
     dd = min(samples, key=lambda r: r["sec"])
     timings["dedup_pipeline"] = dd["sec"]
 
-    # host-window context for the artifact (see the probe docstrings):
-    # ratio = parallel shape, kernel = absolute speed right now.
-    # Probed AFTER spark.stop(): a live idle JVM depressed the probe
-    # ~3x (0.219/438 with the session up vs 0.764/1555 standalone in
-    # the same host window).
+    # Probed AFTER spark.stop(): a live idle JVM depressed the kernel
+    # probe ~3x (438 vs 1555 docs/s standalone in the same host window).
     spark.stop()
-    host_ratio = round(host_control(), 3)
     host_abs = round(host_kernel_docs_per_sec(), 1)
 
     total = round(sum(timings.values()), 3)
@@ -182,7 +180,6 @@ def main_default() -> None:
                 "dedup_files_per_sec": dd["files_per_sec"],
                 "dedup_n_docs": dd["n_docs"],
                 "dedup_runs_sec": [s["sec"] for s in samples],
-                "host_control_2_to_8": host_ratio,
                 "host_kernel_docs_per_sec": host_abs,
             }
         )
@@ -206,183 +203,63 @@ def _one_scaling_run(corpus: str, cores: int, parts: int) -> dict:
     return r
 
 
-_CONTROL_TEXTS: list[bytes] | None = None
-
-
-def _control_work(batch):
-    from simhash_text_dedup_spark.fingerprint_core import simhash_batch
-
-    return simhash_batch(batch, width=3)[0]
-
-
-def _ensure_control_texts(n_docs: int = 12000) -> list[bytes]:
-    global _CONTROL_TEXTS
-    if _CONTROL_TEXTS is None:
-        from simhash_text_dedup_spark.sources.corpus import (
-            CorpusSpec,
-            generate_corpus,
-        )
-
-        docs_pdf, _ = generate_corpus(CorpusSpec(n_docs=n_docs, seed=3))
-        _CONTROL_TEXTS = [t.encode() for t in docs_pdf.content.tolist()]
-    return _CONTROL_TEXTS
-
-
 def host_kernel_docs_per_sec(n_docs: int = 12000) -> float:
-    """Absolute single-process kernel throughput (docs/sec) on the
-    frozen seed=3 control corpus — a Spark-free probe of the HOST's
-    current ABSOLUTE speed.  The ratio control below tracks parallel
-    *shape* only: this box has been observed at 38.5k and 5.1k
-    pipeline files/s within the same day while the ratio control read
-    a normal 0.77 both times, so a recorded files/s number needs its
-    own absolute window context in the artifact."""
-    texts = _ensure_control_texts(n_docs)
-    _control_work(texts[:512])  # warm numpy/JIT paths
+    """Single-process SimHash kernel throughput (docs/sec) on a fixed
+    seed=3 corpus: a Spark-free read of the host's speed at the time of
+    the run, recorded next to the pipeline numbers it qualifies."""
+    from simhash_text_dedup_spark.fingerprint_core import simhash_batch
+    from simhash_text_dedup_spark.sources.corpus import CorpusSpec, generate_corpus
+
+    docs_pdf, _ = generate_corpus(CorpusSpec(n_docs=n_docs, seed=3))
+    texts = [t.encode() for t in docs_pdf.content.tolist()]
+    simhash_batch(texts[:512], width=3)  # warm numpy paths
     t0 = time.time()
-    _control_work(texts)
+    simhash_batch(texts, width=3)
     return len(texts) / (time.time() - t0)
 
 
-def host_control(lo: int = 2, hi: int = 8, n_docs: int = 12000) -> float:
-    """~20-30 s bare-multiprocessing kernel probe of the HOST's current
-    lo->hi parallel-speedup capability (no Spark, no JVM).  This box's
-    effective CPU/bandwidth drifts on a minutes scale (2-3x on
-    identical warm jobs); a pair measured while the probe reads low is
-    measuring the host, not the job."""
-    from multiprocessing import Pool
-
-    _ensure_control_texts(n_docs)
-    chunk = max(1, len(_CONTROL_TEXTS) // 32)
-    chunks = [
-        _CONTROL_TEXTS[i:i + chunk]
-        for i in range(0, len(_CONTROL_TEXTS), chunk)
-    ]
-    walls: dict[int, float] = {}
-    for procs in (lo, hi):
-        with Pool(procs) as p:
-            p.map(_control_work, chunks[:4])  # warm workers
-            t0 = time.time()
-            p.map(_control_work, chunks)
-            walls[procs] = time.time() - t0
-    return (walls[lo] / walls[hi]) / (hi / lo)
+SCALING_PAIRS = 3
 
 
-def _apply_tlo_band(pairs: list, t_lo_key: str, abs_band: str = "") -> None:
-    """Invalidate pairs whose lo-core leg drifted off the job constant.
-
-    Relative check: the lo leg is per-core-compute bound and constant
-    across rounds (clean-pair ledger 76.7-92.7 s at 1M docs / 2 cores),
-    so a leg > 7% off the SESSION median is invalid in either direction
-    (a drifted lo leg deflates OR inflates raw efficiency; observed:
-    a T2=118.6 s pair "scored" 0.912).
-
-    Absolute check (``abs_band="lo_s,hi_s"``): the relative band cannot
-    catch a session whose EVERY lo leg is inflated — campaign-6 ran
-    T_2 = 87-106 s across a whole session (all median-relative "in
-    band") and the inflated legs scored 0.842/0.876 where the job
-    constant would read ~0.73. When set, a leg outside [lo_s, hi_s]
-    is invalid regardless of the session median. Unset = relative
-    check only (the constant is specific to one corpus size + level).
-    """
-    t_los = sorted(p[t_lo_key]["sec"] for p in pairs)
-    med_t_lo = t_los[len(t_los) // 2]
-    abs_lo, abs_hi = (
-        tuple(float(x) for x in abs_band.split(","))
-        if abs_band
-        else (0.0, float("inf"))
-    )
-    for p in pairs:
-        rel_ok = abs(p[t_lo_key]["sec"] - med_t_lo) / med_t_lo <= 0.07
-        abs_ok = abs_lo <= p[t_lo_key]["sec"] <= abs_hi
-        p["t_lo_in_band"] = rel_ok and abs_ok
-        p["clean"] = bool(p["clean"] and p["t_lo_in_band"])
+def scaling_levels(hi: int) -> tuple[int, int]:
+    """(N, 4N) cores for the scaling check: 4N is the session's core
+    count, N a quarter of it (at least 1, so 2 cores compare 1 vs 2)."""
+    if hi < 2:
+        raise SystemExit(
+            "bench.py --scaling needs at least 2 CPUs: on 1 both levels "
+            "would be local[1]"
+        )
+    return max(1, hi // 4), hi
 
 
 def main_scaling() -> None:
-    """Two-parallelism scaling evidence (writes BENCH/BASELINE results).
-
-    Paired-interleaved protocol with CONTROL BRACKETING: alternate
-    local[lo] / local[hi] runs, compute the efficiency per adjacent
-    pair, and bracket every pair with the bare-kernel host control —
-    a pair only counts as CLEAN if the host could express >=
-    $SPARK_GRAFT_CONTROL_THRESHOLD (default 0.8) of ideal speedup both
-    immediately before and immediately after it (the round-3 sessions
-    showed the host drifting INSIDE the measurement window after a
-    clean launch gate).  Pairs keep coming until `need_clean` clean
-    pairs exist or `max_pairs` is hit; the reported value is the
-    median over clean pairs (falls back to all pairs, flagged, if the
-    host never stayed clean through one).
-    """
+    """N vs 4N scaling check: the identical dedup job at local[lo] and
+    local[hi] (partitions scaled with the cores), in SCALING_PAIRS
+    interleaved pairs that alternate which level runs first.  Prints
+    each pair's efficiency (T_lo / T_hi) / (hi / lo) and their median."""
+    # the cores get_spark picks: $SPARK_GRAFT_CPUS, else the CPUs this
+    # process may run on
+    lo, hi = scaling_levels(
+        int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    )
     corpus = ensure_corpus(BENCH_DOCS)
-    need_clean = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
-    max_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_PAIRS", "6"))
-    threshold = float(os.environ.get("SPARK_GRAFT_CONTROL_THRESHOLD", "0.8"))
-    # N and 4N cores. Default 2 -> 8: on this single-box sandbox the
-    # pipeline saturates the VM's memory bandwidth at ~8 cores (measured
-    # ~30k files/s ceiling), so 8 -> 32 measures DRAM contention, not the
-    # job's scalability — a real 4x cluster adds DRAM/disk with every
-    # node. Override with SPARK_GRAFT_SCALING_LEVELS="8,32" to measure
-    # the ceiling itself.
-    lo, hi = (
-        int(x) for x in os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "2,8").split(",")
-    )
     pairs = []
-    c_prev = round(host_control(lo, hi), 3)
-    print(f"[scaling] control before pair 0: {c_prev}", file=sys.stderr,
-          flush=True)
-    for i in range(max_pairs):
-        r_lo = _one_scaling_run(corpus, lo, lo * 2)
-        r_hi = _one_scaling_run(corpus, hi, hi * 2)
-        c_after = round(host_control(lo, hi), 3)
-        pair = {
-            f"local[{lo}]": r_lo,
-            f"local[{hi}]": r_hi,
-            "efficiency": round((r_lo["sec"] / r_hi["sec"]) / (hi / lo), 3),
-            "control_before": c_prev,
-            "control_after": c_after,
-            "clean": min(c_prev, c_after) >= threshold,
-        }
-        pairs.append(pair)
-        print(
-            f"[scaling] pair {i}: eff={pair['efficiency']} "
-            f"controls=({c_prev},{c_after}) clean={pair['clean']}",
-            file=sys.stderr, flush=True,
-        )
-        c_prev = c_after
-        if sum(p["clean"] for p in pairs) >= need_clean:
-            break
-    # post-hoc T_lo validity bands (relative + optional absolute);
-    # rationale in _apply_tlo_band's docstring
-    t_lo_key = f"local[{lo}]"
-    abs_band = os.environ.get("SPARK_GRAFT_TLO_ABS_BAND", "")
-    _apply_tlo_band(pairs, t_lo_key, abs_band)
-    clean = sorted(
-        (p for p in pairs if p["clean"]), key=lambda p: p["efficiency"]
-    )
-    ranked_all = sorted(pairs, key=lambda p: p["efficiency"])
-    basis = clean if clean else ranked_all
-    # median PAIR (need the dict, not an average); for even-sized bases
-    # take the LOWER middle element — the conservative read, so a
-    # 2-clean-pair fire reports its weaker pair, never its stronger one
-    med = basis[(len(basis) - 1) // 2]
-    out = {
+    for i in range(SCALING_PAIRS):
+        order = (lo, hi) if i % 2 == 0 else (hi, lo)
+        runs = {c: _one_scaling_run(corpus, c, c * 2) for c in order}
+        eff = round((runs[lo]["sec"] / runs[hi]["sec"]) / (hi / lo), 3)
+        pairs.append({"first": f"local[{order[0]}]",
+                      f"local[{lo}]": runs[lo], f"local[{hi}]": runs[hi],
+                      "efficiency": eff})
+        print(f"[scaling] pair {i}: eff={eff}", file=sys.stderr, flush=True)
+    effs = sorted(p["efficiency"] for p in pairs)
+    print(json.dumps({
         "metric": f"scaling_efficiency_{lo}_to_{hi}",
-        "value": med["efficiency"],
+        "value": effs[len(effs) // 2],
         "unit": "ratio",
-        "median_pair": med,
-        "basis": "clean_pairs" if clean else "all_pairs_NO_CLEAN_WINDOW",
-        "n_clean": len(clean),
-        "control_threshold": threshold,
-        "t_lo_abs_band": abs_band or None,
-        "all_efficiencies": [p["efficiency"] for p in ranked_all],
-        "all_pairs": ranked_all,
-        "note": (
-            f"efficiency = (T_{lo} / T_{hi}) / {hi//lo} per interleaved "
-            "pair; every pair bracketed by bare-kernel host controls; "
-            "median over clean pairs reported; target >= 0.8"
-        ),
-    }
-    print(json.dumps(out))
+        "efficiencies": [p["efficiency"] for p in pairs],
+        "pairs": pairs,
+    }))
 
 
 if __name__ == "__main__":

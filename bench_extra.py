@@ -1,16 +1,14 @@
 #!/usr/bin/env python
 """Supplementary measurement harness for the optimization round.
 
-NOT the driver contract (bench.py is frozen for that).  This file:
+Not the driver contract (that is bench.py).  This file:
 
   * times each headline query in isolation with the noop sink
     (guide §1.4), labelled via setJobDescription (guide §1.5),
     N samples each, reporting min/median;
   * optionally dumps `.explain("formatted")` for each query to
     plans/<tag>/<query>_<suffix>.txt (guide §7.2) — the evidence files
-    OPTIMIZATION_r06.md cites;
-  * `--jobs <query>`: per-job wall breakdown of one query (counts the
-    Spark jobs an action tree runs via a job-group listener).
+    OPTIMIZATION_r06.md cites.
 
 Usage:
   python bench_extra.py                       # time all headline queries

@@ -20,7 +20,6 @@ class DedupConfig:
     # --- SimHash fingerprint (frozen spec; we own this definition — the
     # reference computed it in an external C++ binary not in the repo).
     shingle_width: int = 3          # overlapping token shingles
-    fingerprint_bits: int = 64
     # fingerprint over comment-stripped / whitespace-collapsed content
     # (functions/code_norm.py — the code analog of the reference's URL
     # normalizer chain). content_sha256 stays over the RAW bytes.

@@ -146,7 +146,7 @@ CHUNK_DOCS = 64
 # position-only power tables M^j / M^-j (mod 2^64), grown on demand and
 # reused across chunks: recomputing the two cumprods per chunk was 2 of
 # the kernel's 4 sequential full-buffer array passes, pure DRAM traffic
-# on a bandwidth-bound stage (CLAUDE.md rule 3/7).  Values depend only
+# on a bandwidth-bound stage (CLAUDE.md rule 7).  Values depend only
 # on the index, so a prefix view of the cached array is bit-identical
 # to the per-chunk cumprod it replaces.  Python workers are
 # single-threaded processes; the cache is per-worker.
